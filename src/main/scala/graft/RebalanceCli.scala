@@ -72,24 +72,27 @@ object RebalanceCli {
       spark.read.parquet(s"$dir/$t.parquet")
         .write.mode(SaveMode.Overwrite).saveAsTable(s"$db.$t")
     }
-    println(s"[cli] catalog: ${TableRegistry.tableNames(spark, db).mkString(", ")}")
+    val names = TableRegistry.tableNames(spark, db)
+    println(s"[cli] catalog: ${names.mkString(", ")}")
 
-    def distFor(table: String): Rebalancer.Distribution = {
-      val hasKey = spark.table(s"$db.$table").columns.contains(key)
-      (mode, hasKey) match {
+    // each table's distribution, resolved once: hash/range on `key` when
+    // the table has that column, round-robin otherwise
+    val dists: Map[String, Rebalancer.Distribution] = names.map { t =>
+      val hasKey = spark.table(s"$db.$t").columns.contains(key)
+      t -> ((mode, hasKey) match {
         case ("hash", true)  => Rebalancer.ByHash(key)
         case ("range", true) => Rebalancer.ByRange(key)
         case _               => Rebalancer.RoundRobin
-      }
-    }
+      })
+    }.toMap
     if (planOnly) {
       // mirror rebalanceDatabase's table selection so the preview shows
       // exactly the per-table shadow-swap the runner would execute
       var step = 0
       def p(s: String): Unit = { step += 1; println(f"[cli] plan $step%3d: $s") }
-      tables.foreach { t =>
+      names.foreach { t =>
         val rows = spark.table(s"$db.$t").count()
-        p(s"WRITE  $db.${t}__v1 <- ${distFor(t)} over $shards shards " +
+        p(s"WRITE  $db.${t}__v1 <- ${dists(t)} over $shards shards " +
           s"($rows rows, one shuffle)")
         p(s"RENAME $db.$t -> $db.${t}__old (metadata only)")
         p(s"RENAME $db.${t}__v1 -> $db.$t (metadata only)")
@@ -99,11 +102,13 @@ object RebalanceCli {
       spark.stop()
       return
     }
-    val moved = RebalanceRunner.rebalanceDatabase(spark, db, distFor, shards, "1")
+    val t0 = System.nanoTime()
+    val moved = RebalanceRunner.rebalanceDatabase(spark, db, dists, shards, "1")
+    val wallMs = (System.nanoTime() - t0) / 1000000
     moved.toSeq.sortBy(_._1).foreach { case (t, n) =>
-      println(s"[cli] rebalanced $t: $n rows -> $shards shards (${distFor(t)})")
+      println(s"[cli] rebalanced $t: $n rows -> $shards shards (${dists(t)})")
     }
-    println(s"""[cli] {"tables":${moved.size},"rows":${moved.values.sum}}""")
+    println(s"""[cli] {"tables":${moved.size},"rows":${moved.values.sum},"wall_ms":$wallMs}""")
     spark.stop()
   }
 }

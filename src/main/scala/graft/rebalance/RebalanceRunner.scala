@@ -1,9 +1,12 @@
 package graft.rebalance
 
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.TableRegistry
+import graft.catalog.{ShadowSwap, TableRegistry}
 
 /** Executes the rebalance workflow against Spark catalog tables.
   *
@@ -15,15 +18,23 @@ import graft.catalog.TableRegistry
   *
   *   1. write a redistributed shadow `table__v{n}` (one shuffle — the O18
   *      data move, reference `sharding_recreation.py:159-160`);
-  *   2. metadata-only renames: `table` → `table__old`, shadow → `table`
-  *      (reference O16/O17, `sharding_recreation.py:212-249`);
+  *   2. promote it ([[graft.catalog.ShadowSwap.promote]]): the stale-`__old`
+  *      drop, uncache and relation refresh run first, then two direct
+  *      catalog renames back to back, `table` → `table__old` and shadow →
+  *      `table` (reference O16/O17, `sharding_recreation.py:212-249`);
   *   3. drop `table__old` (reference O19, `sharding_recreation.py:194-209`).
   *
   * The canonical name always fronts either complete-old or complete-new
-  * data — fixing the reference's non-atomic INSERT window. Every step is
-  * guarded/idempotent like the reference's `IF NOT EXISTS` / `EXISTS`
-  * probes. At 100 TB the only data movement is step 1's shuffle; AQE
-  * handles skewed shard keys.
+  * data — fixing the reference's non-atomic INSERT window. It fronts nothing
+  * only between the two renames of step 2: two catalog calls, with no SQL
+  * parsed in between. Every step is guarded/idempotent like the reference's
+  * `IF NOT EXISTS` / `EXISTS` probes. At 100 TB the only data movement is
+  * step 1's shuffle; AQE handles skewed shard keys.
+  *
+  * Unlike the reference, which moves one table at a time,
+  * [[rebalanceDatabase]] runs tables concurrently: a small table's time is
+  * mostly its fixed driver and scheduling path, which leaves task slots idle
+  * when tables run one after another.
   */
 object RebalanceRunner {
 
@@ -36,6 +47,7 @@ object RebalanceRunner {
       shards: Int,
       version: String): Long = {
 
+    requireVersion(version)
     val fq = s"$db.$table"
     val shadow = s"$db.${table}__v$version"
     val old = s"$db.${table}__old"
@@ -44,18 +56,12 @@ object RebalanceRunner {
     // finish the promotion instead of failing the existence check
     if (!TableRegistry.exists(spark, db, table) &&
         TableRegistry.exists(spark, db, s"${table}__v$version")) {
-      spark.sql(s"ALTER TABLE $shadow RENAME TO $fq")
-      spark.sql(s"DROP TABLE IF EXISTS $old")
+      ShadowSwap.promote(spark, fq, shadow, old)
       return spark.table(fq).count()
     }
     require(TableRegistry.exists(spark, db, table), s"no such table: $fq")
 
-    val src = spark.table(fq)
-    val shaped = dist match {
-      case Rebalancer.ByHash(key)  => src.repartition(shards, col(key))
-      case Rebalancer.ByRange(key) => src.repartitionByRange(shards, col(key))
-      case Rebalancer.RoundRobin   => src.repartition(shards)
-    }
+    val shaped = Rebalancer.shape(spark.table(fq), dist, shards)
     // shadow write: full new copy lands before any rename touches `table`.
     // The moved-row count rides the write pass via observe() — a separate
     // post-write count() would re-scan the whole shadow (the cost
@@ -65,12 +71,16 @@ object RebalanceRunner {
       .write.mode(SaveMode.Overwrite).saveAsTable(shadow)
     val moved = obs.get("n").asInstanceOf[Long]
 
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-    spark.sql(s"ALTER TABLE $fq RENAME TO $old")
-    spark.sql(s"ALTER TABLE $shadow RENAME TO $fq")
-    spark.sql(s"DROP TABLE IF EXISTS $old")
+    ShadowSwap.promote(spark, fq, shadow, old)
     moved
   }
+
+  /** Versions are digits (the reference draws a random number), so that a
+    * `__v<digits>` suffix marks swap residue and nothing else.
+    */
+  private def requireVersion(version: String): Unit =
+    require(version.nonEmpty && version.forall(_.isDigit),
+      s"version must be digits: '$version'")
 
   /** O20 destructive rollback (reference `sharding_recreation.py:27-41`,
     * reachable there only via the commented-out call at line 342): drop
@@ -92,6 +102,7 @@ object RebalanceRunner {
       db: String,
       version: String,
       force: Boolean = false): Seq[String] = {
+    requireVersion(version)
     require(force,
       s"dropVersioned discards every $db.*__v$version shadow irreversibly; " +
         "pass force=true to confirm")
@@ -114,6 +125,14 @@ object RebalanceRunner {
   /** Rebalance every data table in a database (the reference's whole-db
     * workflow), returning table → rows moved.
     *
+    * Tables run concurrently, [[rebalanceTable]] on each, on a pool of
+    * `min(tables, defaultParallelism)` threads created for this call — so
+    * every worker inherits the caller's Spark local properties (job group,
+    * scheduler pool, any request tag). After the first failure no further
+    * table starts; tables already running finish, swap included, and the
+    * call then rethrows that first error. Every canonical name still fronts
+    * complete old or complete new data, and a rerun converges.
+    *
     * `recreateMvs` goes one step beyond the reference, whose MV handling is
     * an explicit TODO (reference `sharding_recreation.py:258-266,337` —
     * views are neither moved nor recreated): with `recreateMvs = true`,
@@ -131,14 +150,16 @@ object RebalanceRunner {
       version: String,
       mvs: Seq[MvDef] = Nil,
       recreateMvs: Boolean = false): Map[String, Long] = {
+    requireVersion(version)
     val names = TableRegistry.tableNames(spark, db)
     val mvNames = mvs.map(_.name).toSet
     // `__mv_stage`/`__mv_old` are MaterializedView shadow-swap residue (a
     // crashed refresh leaves them behind); without the explicit exclusion
     // they'd classify as canonical base tables and get rebalanced/retained
-    // forever. `__v`/`__old` matching covers the base-table swap residue.
+    // forever. `__v<digits>`/`__old` suffixes are the base-table swap
+    // residue — a real table such as `ship__via` is not.
     val isResidue = (n: String) =>
-      n.contains("__v") || n.endsWith("__old") ||
+      n.matches(".*__v[0-9]+") || n.endsWith("__old") ||
         n.endsWith("__mv_stage") || n.endsWith("__mv_old")
     val canonical = names.filterNot(n => isResidue(n) || mvNames.contains(n))
     // a crash between rebalanceTable's two renames strands a table with the
@@ -153,9 +174,20 @@ object RebalanceRunner {
       case n if n.endsWith(suffix) => n.substring(0, n.length - suffix.length)
     }.filterNot(n => canonical.contains(n) || mvNames.contains(n) || isResidue(n))
       .distinct
-    val moved = (canonical ++ orphaned)
-      .map(t => t -> rebalanceTable(spark, db, t, dist(t), shards, version))
-      .toMap
+    val tables = canonical ++ orphaned
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(tables.size, spark.sparkContext.defaultParallelism)))
+    val firstError = new AtomicReference[Throwable]()
+    val runs = tables.map { t =>
+      pool.submit[Option[(String, Long)]] { () =>
+        if (firstError.get != null) None
+        else try Some(t -> rebalanceTable(spark, db, t, dist(t), shards, version))
+        catch { case e: Throwable => firstError.compareAndSet(null, e); None }
+      }
+    }
+    pool.shutdown()
+    val moved = runs.flatMap(_.get).toMap
+    Option(firstError.get).foreach(e => throw e)
     if (recreateMvs) mvs.foreach { mv =>
       graft.streaming.MaterializedView.refresh(spark.sql(mv.sql), s"$db.${mv.name}")
     }

@@ -31,16 +31,19 @@ object Rebalancer {
   /** round-robin, ClickHouse `rand()` sharding analogue */
   case object RoundRobin extends Distribution
 
+  /** `df` laid out over `shards` output partitions by `dist` — one shuffle. */
+  def shape(df: DataFrame, dist: Distribution, shards: Int): DataFrame = dist match {
+    case ByHash(key)  => df.repartition(shards, col(key))
+    case ByRange(key) => df.repartitionByRange(shards, col(key))
+    case RoundRobin   => df.repartition(shards)
+  }
+
   /** Redistribute `df` into `shards` output partitions at `dest`.
     * Returns the row count moved (forces the write).
     */
   def redistribute(df: DataFrame, dist: Distribution, shards: Int, dest: String): Long = {
     val spark = df.sparkSession
-    val shaped = dist match {
-      case ByHash(key)  => df.repartition(shards, col(key))
-      case ByRange(key) => df.repartitionByRange(shards, col(key))
-      case RoundRobin   => df.repartition(shards)
-    }
+    val shaped = shape(df, dist, shards)
     val staging = dest + ".__staging__"
     // the moved-row count rides the write pass via observe — a separate
     // post-swap count() would re-read the whole destination at 100 TB

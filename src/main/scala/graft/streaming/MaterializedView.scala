@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.catalog.ShadowSwap
 
 /** Continuous materialized-view maintenance — the piece the reference leaves
   * as a manual TODO (MVs are never created or populated automatically,
@@ -10,16 +12,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * aggregation kept up to date in a catalog table via per-micro-batch keyed
   * upsert.
   *
-  * Refresh discipline reuses the rebalance shadow-swap (stage table →
-  * metadata-only renames): a reader never observes a PARTIAL batch — any
-  * snapshot it resolves is complete. The swap is not fully atomic for
-  * concurrent readers, though: between the two renames the canonical name
-  * is briefly vacant (TABLE_OR_VIEW_NOT_FOUND), and a reader mid-scan of
-  * the pre-swap file listing can hit missing files once `__mv_old` is
-  * dropped — concurrent readers need plain retry-on-error (at which point
-  * they see the complete next snapshot). A catalog with atomic
-  * RENAME ... TO ... swaps (or view-repointing) removes the window at
-  * real scale.
+  * Refresh discipline reuses the rebalance shadow-swap
+  * ([[graft.catalog.ShadowSwap.promote]]: stage table → two catalog
+  * renames): a reader never observes a PARTIAL batch — any snapshot it
+  * resolves is complete. The swap is not fully atomic for concurrent
+  * readers, though: between the two renames the canonical name is vacant
+  * (TABLE_OR_VIEW_NOT_FOUND) — two direct catalog calls, typically well
+  * under a millisecond — and a reader mid-scan of the pre-swap file listing
+  * can hit missing files once `__mv_old` is dropped. Concurrent readers
+  * need plain retry-on-error (at which point they see the complete next
+  * snapshot). A catalog with atomic RENAME ... TO ... swaps (or
+  * view-repointing) removes the window at real scale.
   *
   * Scale note (100 TB): the upsert rewrites only (previous MV ∖ batch keys)
   * ∪ batch — for windowed aggregations the batch touches the few open
@@ -39,12 +42,24 @@ object MaterializedView {
     * Always clears `__mv_old` residue. Idempotent; called by both [[upsert]]
     * and [[refresh]] before they touch anything.
     */
-  def recover(spark: org.apache.spark.sql.SparkSession, target: String): Unit = {
+  def recover(spark: SparkSession, target: String): Unit = {
     val stage = s"${target}__mv_stage"
-    val old = s"${target}__mv_old"
     if (!spark.catalog.tableExists(target) && spark.catalog.tableExists(stage))
-      spark.sql(s"ALTER TABLE $stage RENAME TO $target")
-    spark.sql(s"DROP TABLE IF EXISTS $old")
+      swap(spark, target)
+    else spark.sql(s"DROP TABLE IF EXISTS ${target}__mv_old")
+  }
+
+  /** Promote `__mv_stage` to `target`, then drop the cached file listing
+    * from before the swap in the user's default session as well, or its
+    * readers keep resolving the canonical name to the deleted pre-swap part
+    * files: foreachBatch runs on a cloned session with its own relation
+    * cache, which the promotion alone refreshes.
+    */
+  private def swap(spark: SparkSession, target: String): Unit = {
+    ShadowSwap.promote(spark, target, s"${target}__mv_stage", s"${target}__mv_old")
+    org.apache.spark.sql.classic.SparkSession.getDefaultSession
+      .filter(_ ne spark)
+      .foreach(_.catalog.refreshTable(target))
   }
 
   /** One keyed upsert: rows of `batch` replace same-key rows of `target`.
@@ -66,8 +81,6 @@ object MaterializedView {
     if (!spark.catalog.tableExists(target)) {
       sized(batch).write.mode(SaveMode.ErrorIfExists).saveAsTable(target)
     } else {
-      val stage = s"${target}__mv_stage"
-      val old = s"${target}__mv_old"
       // the merged plan reads `batch` twice (anti-join keys + union side);
       // without a cache each micro-batch recomputes its upstream
       // aggregation twice per refresh
@@ -75,20 +88,9 @@ object MaterializedView {
       val merged = spark.table(target)
         .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
         .unionByName(batch)
-      try sized(merged).write.mode(SaveMode.Overwrite).saveAsTable(stage)
+      try sized(merged).write.mode(SaveMode.Overwrite).saveAsTable(s"${target}__mv_stage")
       finally batch.unpersist()
-      spark.sql(s"DROP TABLE IF EXISTS $old")
-      spark.sql(s"ALTER TABLE $target RENAME TO $old")
-      spark.sql(s"ALTER TABLE $stage RENAME TO $target")
-      spark.sql(s"DROP TABLE IF EXISTS $old")
-      // drop the cached file listing from before the swap, or readers keep
-      // resolving the canonical name to the deleted pre-swap part files.
-      // foreachBatch runs on a cloned session with its own relation cache,
-      // so refresh the user's default session as well.
-      spark.catalog.refreshTable(target)
-      org.apache.spark.sql.classic.SparkSession.getDefaultSession
-        .filter(_ ne spark)
-        .foreach(_.catalog.refreshTable(target))
+      swap(spark, target)
     }
   }
 
@@ -100,22 +102,9 @@ object MaterializedView {
     */
   def refresh(df: DataFrame, target: String): Unit = {
     val spark = df.sparkSession
-    val stage = s"${target}__mv_stage"
-    val old = s"${target}__mv_old"
     recover(spark, target)
-    df.write.mode(SaveMode.Overwrite).saveAsTable(stage)
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-    if (spark.catalog.tableExists(target))
-      spark.sql(s"ALTER TABLE $target RENAME TO $old")
-    spark.sql(s"ALTER TABLE $stage RENAME TO $target")
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-    // same cross-session cache refresh as upsert: if this ran on a cloned
-    // session, the default session's cached file listing still points at
-    // the deleted pre-swap part files
-    spark.catalog.refreshTable(target)
-    org.apache.spark.sql.classic.SparkSession.getDefaultSession
-      .filter(_ ne spark)
-      .foreach(_.catalog.refreshTable(target))
+    df.write.mode(SaveMode.Overwrite).saveAsTable(s"${target}__mv_stage")
+    swap(spark, target)
   }
 
   /** Start continuous materialization of a (usually aggregated) stream into

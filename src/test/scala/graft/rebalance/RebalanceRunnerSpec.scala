@@ -1,5 +1,9 @@
 package graft.rebalance
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.input_file_name
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -31,13 +35,125 @@ class RebalanceRunnerSpec extends AnyFunSuite with SparkSpec {
   test("whole-database rebalance covers every data table") {
     import spark.implicits._
     freshDatabase("graft_db2")
-    Seq("t1", "t2").foreach { t =>
+    // `ship__via` contains `__v` but is a real table, not swap residue
+    Seq("t1", "t2", "ship__via").foreach { t =>
       (1L to 100L).map(i => (i, i * 2)).toDF("k", "v")
         .write.mode("overwrite").saveAsTable(s"graft_db2.$t")
     }
     val moved = RebalanceRunner.rebalanceDatabase(
       spark, "graft_db2", _ => Rebalancer.ByHash("k"), 4, "9")
-    assert(moved == Map("t1" -> 100L, "t2" -> 100L))
+    assert(moved == Map("t1" -> 100L, "t2" -> 100L, "ship__via" -> 100L))
+  }
+
+  /** sum(k), sum(v) and count(*) of a table's rows. */
+  private def stats(fq: String): (Long, Long, Long) = {
+    val r = spark.sql(s"SELECT sum(k), sum(v), count(*) FROM $fq").first()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
+  /** `n` tables `t00`.. in `db`, table i holding 40 + 10·i rows (k, v). */
+  private def seedTables(db: String, n: Int): Map[String, (Long, Long, Long)] = {
+    import spark.implicits._
+    freshDatabase(db)
+    (0 until n).map { i =>
+      val t = f"t$i%02d"
+      val rows = (1L to 40L + 10 * i).map(k => (k, k * (i + 1)))
+      rows.toDF("k", "v").write.saveAsTable(s"$db.$t")
+      t -> (rows.map(_._1).sum, rows.map(_._2).sum, rows.size.toLong)
+    }.toMap
+  }
+
+  private def residue(db: String): Seq[String] =
+    TableRegistry.tableNames(spark, db).filter(n => n.contains("__v") || n.endsWith("__old"))
+
+  test("whole-db rebalance over more tables than task slots keeps every table") {
+    val want = seedTables("graft_many", 14)
+    assert(want.size > spark.sparkContext.defaultParallelism)
+    val moved = RebalanceRunner.rebalanceDatabase(
+      spark, "graft_many", _ => Rebalancer.ByHash("k"), 4, "3")
+    assert(moved == want.map { case (t, s) => t -> s._3 }, moved)
+    want.foreach { case (t, s) => assert(stats(s"graft_many.$t") == s, t) }
+    assert(residue("graft_many").isEmpty, residue("graft_many"))
+  }
+
+  test("a failing table stops the whole-db run, leaves every table complete, " +
+    "and a rerun converges") {
+    val want = seedTables("graft_fail", 12)
+    val broken = (t: String) =>
+      Rebalancer.ByHash(if (t == "t05") "no_such_col" else "k"): Rebalancer.Distribution
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      RebalanceRunner.rebalanceDatabase(spark, "graft_fail", broken, 4, "4")
+    }
+    assert(err.getMessage.contains("no_such_col"), err.getMessage)
+    // every canonical name fronts complete old or complete new data
+    want.foreach { case (t, s) => assert(stats(s"graft_fail.$t") == s, t) }
+    val moved = RebalanceRunner.rebalanceDatabase(
+      spark, "graft_fail", _ => Rebalancer.ByHash("k"), 4, "4")
+    assert(moved == want.map { case (t, s) => t -> s._3 }, moved)
+    want.foreach { case (t, s) => assert(stats(s"graft_fail.$t") == s, t) }
+    assert(residue("graft_fail").isEmpty, residue("graft_fail"))
+  }
+
+  test("a table cached before the rebalance reads the new files afterwards") {
+    seedTables("graft_cache", 1)
+    spark.catalog.cacheTable("graft_cache.t00")
+    assert(spark.table("graft_cache.t00").count() == 40)
+    RebalanceRunner.rebalanceTable(
+      spark, "graft_cache", "t00", Rebalancer.ByHash("k"), 4, "1")
+    // a stale cache entry would still answer for the table's location, and
+    // an in-memory relation reports no input file at all
+    val files = spark.table("graft_cache.t00")
+      .select(input_file_name()).distinct().collect().map(_.getString(0))
+    assert(files.length == 4 && files.forall(_.contains("/graft_cache.db/t00/")),
+      files.mkString(", "))
+    assert(stats("graft_cache.t00") == (820L, 820L, 40L))
+    spark.catalog.clearCache()
+  }
+
+  test("every job of a whole-db run carries the caller's job group") {
+    seedTables("graft_props", 10)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val sc = spark.sparkContext
+    // the groups of the jobs started since the last call: a marker job is
+    // run last, and the bus delivers job starts in order, so once the
+    // marker is seen every earlier job has been seen
+    def drain(marker: String): Seq[String] = {
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      val seen = groups.asScala.toSeq
+      groups.clear()
+      assert(seen.lastOption.contains(marker), seen)
+      seen.init
+    }
+    sc.addSparkListener(listener)
+    // two calls under different groups: workers of a pool shared across
+    // calls would carry the first call's group into the second
+    try {
+      drain("before")
+      Seq("rebalance-a" -> "1", "rebalance-b" -> "2").foreach { case (group, version) =>
+        sc.setJobGroup(group, "rebalance")
+        RebalanceRunner.rebalanceDatabase(
+          spark, "graft_props", _ => Rebalancer.ByHash("k"), 4, version)
+        val seen = drain(s"$group-marker")
+        assert(seen.size >= 10 && seen.forall(_ == group), seen)
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("versions must be digits") {
+    intercept[IllegalArgumentException] {
+      RebalanceRunner.rebalanceDatabase(spark, "graft_rr", _ => Rebalancer.RoundRobin, 2, "v1")
+    }
   }
 
   test("MV swap residue is neither rebalanced nor retained as canonical") {
